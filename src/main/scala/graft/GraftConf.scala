@@ -62,14 +62,15 @@ final case class GraftConf(
       * (guide §2.6; measured 75 s -> 6 s at 32 cores on the q17-shaped
       * sf1 search KNN, tools/KnnParProbe). [[graft.operators.Knn
       * .spreadForScoring]] repartitions such a corpus to
-      * `defaultParallelism` when its Catalyst estimate says it carries
-      * fewer natural splits than the session has cores — but only at or
-      * above this floor: below it single-task scoring costs less than
-      * the repartition exchange itself (an 8 MiB dim-16 corpus scores a
-      * few hundred queries in well under the ~100 ms a small shuffle
-      * costs). The check is pure plan arithmetic (estimate /
-      * files.maxPartitionBytes) — no job, and on a real multi-split
-      * corpus it is a no-op. Floor, not a tuning constant: production
+      * `defaultParallelism` when it carries fewer natural splits than
+      * the session has cores — but only at or above this floor: below it
+      * single-task scoring costs less than the repartition exchange
+      * itself (an 8 MiB dim-16 corpus scores a few hundred queries in
+      * well under the ~100 ms a small shuffle costs). The check is pure
+      * plan arithmetic — splits = max(Catalyst estimate /
+      * files.maxPartitionBytes, input files of the file-source leaves) —
+      * no job, and on a corpus already split (or stored as files) over
+      * the cores it is a no-op. Floor, not a tuning constant: production
       * corpora either sit far above it (spread engages until the scan's
       * own splits reach core count) or far below (per-batch frames). */
     spreadScoringMinBytes: Long = 8L << 20

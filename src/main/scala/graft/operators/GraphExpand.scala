@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   * Two modes:
   *  - [[expandFaithful]]: reproduces the single-pop quirk for depth=1
   *    (the only depth the reference ever uses). The correctness oracle
-  *    targets this.
+  *    targets this. It is [[expandFaithfulDepth]] at depth 1, which
+  *    reads its seeds once.
   *  - [[expandAll]]: the scalable generalization — proper BFS over the
   *    whole frontier per hop, dedup keeps max score. `depth` is a plan
   *    literal, so the hop loop unrolls into `depth` joins: no driver-side
@@ -36,49 +37,21 @@ import org.apache.spark.sql.functions._
   * without a scope they are plain persists the caller must drop. */
 object GraphExpand {
 
-  /** Faithful depth-1 expansion.
+  /** Faithful depth-1 expansion: [[expandFaithfulDepth]] at depth 1.
     * @param seeds KNN results (qid, id, sim, rank) — rank 1 = queue head
-    * @param edges canonical undirected edge table (src, dst, score)
-    * @return (qid, id, score, origin) — origin marks seed vs expanded
+    * @param edges undirected edge table (src, dst, score)
+    * @return (qid, id, score, origin, rnk) — origin marks seed vs expanded
     */
   def expandFaithful(
       seeds: DataFrame,
       edges: DataFrame,
       k: Int,
-      conf: GraftConf = GraftConf.default): DataFrame = {
-    val sym = GraphBuild.symmetric(edges)
+      conf: GraftConf = GraftConf.default): DataFrame =
+    expandFaithfulDepth(seeds, edges, k, depth = 1, conf)
 
-    // the popped node: rank-1 seed per query (search.py:13 pop(0) of the
-    // score-desc seed list)
-    val head = seeds.filter(col("rank") === 1)
-      .select(col("qid").as("h_qid"), col("id").as("h_id"), col("sim").as("h_sim"))
-
-    // its neighbors, decayed (F7: parent * edge * 0.9)
-    val neighbors = head
-      .join(sym, col("h_id") === col("u"))
-      .select(
-        col("h_qid").as("qid"),
-        col("v").as("id"),
-        (col("h_sim") * col("score") * lit(conf.expansionDecay)).as("score"))
-
-    // seeds win on id collision (expanded_results dict guard, search.py:19)
-    val seedRows = seeds.select(
-      col("qid"), col("id"), col("sim").as("score"), lit(0).as("prio"))
-    val expandedRows = neighbors.withColumn("prio", lit(1))
-
-    val wDedup = Window.partitionBy("qid", "id").orderBy(col("prio"), col("score").desc)
-    val wRank = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    seedRows.unionByName(expandedRows)
-      .withColumn("_rn", row_number().over(wDedup))
-      .filter(col("_rn") === 1)
-      .withColumn("origin", when(col("prio") === 0, "seed").otherwise("expanded"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select("qid", "id", "score", "origin", "rnk")
-  }
-
-  /** Faithful expansion at depth D > 1: unrolls the reference's
-    * pop-one-per-step FIFO loop (search.py:10-14). Seeds enter the queue
+  /** Faithful expansion at depth D (D = 1 is [[expandFaithful]]):
+    * unrolls the reference's pop-one-per-step FIFO loop
+    * (search.py:10-14). Seeds enter the queue
     * in rank order and a pop's discoveries are APPENDED — behind the
     * remaining seeds — so as long as every query has >= depth seeds, the
     * first `depth` pops are exactly seed ranks 1..depth, and the loop
@@ -118,14 +91,26 @@ object GraphExpand {
     * wins" per (qid, id) — seeds at step 0, rank-i discoveries at step
     * i. So the per-step anti-join chain (depth× joins, unions, and
     * cache pins, each a separate job barrier) collapses into ONE
-    * parents⨝edges join plus ONE min-prio window dedup, identical by
+    * seeds⨝edges join plus ONE min-prio window dedup, identical by
     * construction (spec- and oracle-pinned; the DuckDB mirror keeps the
     * unrolled NOT-EXISTS statement, so the equivalence is cross-checked
-    * against an independent formulation rather than assumed).
+    * against an independent formulation rather than assumed). Among
+    * discoveries of one step the higher score wins, which only matters
+    * for duplicate edges (a raw log) at depth 1.
     *
-    * Scale: parents are ≤ depth rows per query (tiny, broadcast); the
-    * symmetric edge table is the big side and is probed by join key
-    * ONCE. depth is a plan literal — no driver-side data iteration. */
+    * SINGLE READ: `seeds` (usually a whole KNN plan) is read once. Every
+    * seed row left-outer-joins the symmetric edges of its own id when
+    * its rank is at most `depth`, and each joined row fans out into the
+    * seed itself (prio 0) and its neighbour (prio = rank, score decayed
+    * F7). `qid` passes through untouched, so when `seeds` arrives
+    * partitioned on `qid` (as [[Knn.search]] leaves it) and the edges
+    * broadcast, the dedup window on (qid, id) and the rank window on
+    * qid reuse that partitioning and the expansion adds no exchange.
+    *
+    * Scale: the symmetric edge table is probed by join key ONCE, as the
+    * build side; the planner broadcasts it when its size estimate allows
+    * and otherwise falls back to a keyed shuffle join. depth is a plan
+    * literal — no driver-side data iteration. */
   def expandFaithfulDepth(
       seeds: DataFrame,
       edges: DataFrame,
@@ -163,21 +148,19 @@ object GraphExpand {
           "out-of-band.")
     }
     val sym = GraphBuild.symmetric(edges)
-    val seedRows = seeds
-      .select(col("qid"), col("id"), col("sim").as("score"), lit(0).as("prio"))
-    // step i's parent is seed rank i; its discoveries carry prio i
-    val parents = seeds.filter(col("rank") <= depth)
-      .select(col("qid").as("h_qid"), col("id").as("h_id"),
-        col("sim").as("h_sim"), col("rank").cast("int").as("prio"))
-    val discoveries = parents.join(sym, col("h_id") === col("u"))
-      .select(col("h_qid").as("qid"), col("v").as("id"),
-        (col("h_sim") * col("score") * lit(conf.expansionDecay)).as("score"),
-        col("prio"))
-    // first-writer-wins = smallest step index per (qid, id); ties are
-    // impossible within a step (one parent, unique neighbors)
-    val wDedup = Window.partitionBy("qid", "id").orderBy(col("prio"))
+    val seedRow = struct(col("id"), col("sim").as("score"), lit(0).as("prio"))
+    val discovery = struct(col("v").as("id"),
+      (col("sim") * col("score") * lit(conf.expansionDecay)).as("score"),
+      col("rank").cast("int").as("prio"))
+    val fanned = seeds.select("qid", "id", "sim", "rank")
+      .join(sym, col("rank") <= depth && col("id") === col("u"), "left_outer")
+      .select(col("qid"), inline(
+        when(col("u").isNull, array(seedRow)).otherwise(array(seedRow, discovery))))
+    // first-writer-wins = smallest step index per (qid, id); a seed
+    // joined to n neighbours repeats n times, identically
+    val wDedup = Window.partitionBy("qid", "id").orderBy(col("prio"), col("score").desc)
     val wRank = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    seedRows.unionByName(discoveries)
+    fanned
       .withColumn("_rn", row_number().over(wDedup))
       .filter(col("_rn") === 1)
       .withColumn("origin", when(col("prio") === 0, "seed").otherwise("expanded"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.GraftConf
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -124,12 +125,14 @@ object Knn {
     * (scoring is per-row and every rank window orders by a proven total
     * order, so results are partitioning-invariant).
     *
-    * The decision is pure plan arithmetic — Catalyst's free size
-    * estimate divided by `files.maxPartitionBytes` approximates the
-    * scan's natural split count; below `conf.spreadScoringMinBytes`
-    * nothing happens (the shuffle would cost more than the scoring),
-    * and at real corpus sizes the estimated split count reaches
-    * `defaultParallelism` and this is a no-op. Never inspects
+    * The decision is pure plan arithmetic — the scan's natural split
+    * count is estimated as the larger of Catalyst's free size estimate
+    * divided by `files.maxPartitionBytes` and the number of input files
+    * of its file-source leaves (a small corpus stored as one file per
+    * core already scans on every core); below
+    * `conf.spreadScoringMinBytes` nothing happens (the shuffle would
+    * cost more than the scoring), and once the estimated split count
+    * reaches `defaultParallelism` this is a no-op. Never inspects
     * `df.rdd`: materializing the RDD of an AQE-planned frame can
     * EXECUTE its shuffle stages just to read a partition count.
     * RDD-backed leaves (localCheckpoint frames) estimate 0 bytes and
@@ -143,7 +146,11 @@ object Knn {
     if (est < BigInt(conf.spreadScoringMinBytes)) return docs
     val splitBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    val estSplits = (est + splitBytes - 1) / splitBytes
+    val files = docs.queryExecution.optimizedPlan.collectLeaves()
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case fs: HadoopFsRelation => fs.location.inputFiles.length }
+      .sum
+    val estSplits = ((est + splitBytes - 1) / splitBytes).max(BigInt(files))
     if (estSplits >= BigInt(target)) docs
     else {
       log.info(s"spreadForScoring: corpus estimate $est bytes ~ $estSplits " +
@@ -162,6 +169,12 @@ object Knn {
     when(qid.isNotNull && id === qid, lit(1.0))
       .otherwise(dotProduct(qvec, emb))
 
+  /** The §2.3 contract above as one plan. All four `row_number` windows
+    * partition on `qid` (a null qid is one window group and one hash
+    * partition, like any other key), so the scored rows cross exactly one
+    * exchange, `hashpartitioning(qid)`, and the result leaves partitioned
+    * on `qid`: a downstream per-query window (the graph expansion's)
+    * reuses that exchange instead of planning its own. */
   def search(
       docs: DataFrame,
       queries: DataFrame,
@@ -198,16 +211,14 @@ object Knn {
     // NULL mtype the two engines would otherwise rank differently (the
     // same divergence class the lang tie-break hit in the datasheet
     // query).
-    val wOver = Window.partitionBy("qid_key")
+    val wOver = Window.partitionBy("qid")
       .orderBy(col("sim").desc, col(idCol), col(mtypeCol).asc_nulls_last)
     val overFetched = scored
-      // null-safe partition key: queries without a qid still form one group
-      .withColumn("qid_key", coalesce(col("qid"), lit("__noqid__")))
       .withColumn("ofr", row_number().over(wOver))
       .filter(col("ofr") <= overFetch)
 
     // step 4: per-bucket rank, keep k/2 (integer division quirk)
-    val wBucket = Window.partitionBy("qid_key", "bucket")
+    val wBucket = Window.partitionBy("qid", "bucket")
       .orderBy(col("sim").desc, col(idCol), col(mtypeCol).asc_nulls_last)
     val kept = overFetched
       .withColumn("brank", row_number().over(wBucket))
@@ -216,12 +227,12 @@ object Knn {
     // step 5: same-bucket rows first (in score order), then cross-bucket
     // rows; truncate at k in THAT order; final sort by sim desc.
     val wUnion = Window
-      .partitionBy("qid_key")
+      .partitionBy("qid")
       .orderBy(
         when(col("bucket") === "same", 0).otherwise(1).asc,
         col("sim").desc,
         col(idCol), col(mtypeCol).asc_nulls_last)
-    val wFinal = Window.partitionBy("qid_key")
+    val wFinal = Window.partitionBy("qid")
       .orderBy(col("sim").desc, col(idCol), col(mtypeCol).asc_nulls_last)
     kept
       .withColumn("urank", row_number().over(wUnion))

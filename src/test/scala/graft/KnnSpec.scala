@@ -68,6 +68,28 @@ class KnnSpec extends SparkSpec {
     assert(res.map(_.getAs[String]("id")).toSeq == Seq("a", "b"))
   }
 
+  test("null qid: every query without a qid ranks as ONE group, beside named queries") {
+    // docs carry distinct sims to [1,0,0,0] (first component) and to
+    // [0,1,0,0] (second component)
+    val docs = docsDf(
+      ("a", "text", Seq(0.9f, 0.1f, 0f, 0f)), ("b", "image", Seq(0.8f, 0.3f, 0f, 0f)),
+      ("c", "text", Seq(0.2f, 0.7f, 0f, 0f)), ("d", "image", Seq(0.1f, 0.6f, 0f, 0f)))
+    val noQid = null.asInstanceOf[String]
+    val q = Seq((noQid, "text", qv), (noQid, "text", Seq(0f, 1f, 0f, 0f)), ("q1", "text", qv))
+      .toDF("qid", "qtype", "qvec")
+    val res = Knn.search(docs, q, k = 4).collect()
+      .map(r => (Option(r.getAs[String]("qid")), r.getAs[String]("id"),
+        r.getAs[Double]("sim").toFloat, r.getAs[Int]("rank")))
+      .toSet
+    // the two qid-less queries pool their 8 scored rows into one group:
+    // same bucket (text) keeps a@0.9 and c@0.7, cross keeps b@0.8 and
+    // d@0.6 — 4 rows, not 4 per query
+    assert(res == Set(
+      (None, "a", 0.9f, 1), (None, "b", 0.8f, 2), (None, "c", 0.7f, 3), (None, "d", 0.6f, 4),
+      (Some("q1"), "a", 0.9f, 1), (Some("q1"), "b", 0.8f, 2),
+      (Some("q1"), "c", 0.2f, 3), (Some("q1"), "d", 0.1f, 4)))
+  }
+
   test("over-fetch bound: bucket ranking sees only the global top k*6 (main.py:209)") {
     // 70 same-modality docs better than the best cross doc; k=10 → fetch 60.
     // The cross doc is outside the top-60, so the cross bucket is EMPTY

@@ -23,10 +23,11 @@ class KnnSpreadSpec extends SparkSpec {
         .as("embedding"))
       // LocalRelation-free: range is a trusted leaf with real stats
       .localCheckpoint() // NOT trusted => never spreads regardless of floor
-  private def scanCorpus(n: Int): DataFrame = {
-    // a parquet-backed corpus: trusted stats, single split at test scale
+  private def scanCorpus(n: Int, files: Int = 1): DataFrame = {
+    // a parquet-backed corpus: trusted stats, one split per file at test
+    // scale (a single file by default)
     val p = java.nio.file.Files.createTempDirectory("knnspread").toString
-    spark.range(n).select(
+    spark.range(0, n, 1, files).select(
       concat(lit("d"), col("id")).as("id"),
       when(col("id") % 3 === 0, "image").otherwise("text").as("mtype"),
       array((0 until 8).map(j =>
@@ -78,6 +79,11 @@ class KnnSpreadSpec extends SparkSpec {
     val rddBacked = corpus(400)
     assert(Knn.spreadForScoring(rddBacked,
       GraftConf(spreadScoringMinBytes = 1L)) eq rddBacked)
+  }
+
+  test("corpus stored as >= defaultParallelism files is a no-op (file-aware split estimate)") {
+    val docs = scanCorpus(400, files = spark.sparkContext.defaultParallelism)
+    assert(Knn.spreadForScoring(docs, GraftConf(spreadScoringMinBytes = 1L)) eq docs)
   }
 
   test("already-split corpus is a no-op (estimated splits >= parallelism)") {

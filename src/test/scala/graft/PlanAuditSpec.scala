@@ -1,10 +1,12 @@
 package graft
 
-import graft.operators.{Knn, Relational}
+import graft.operators.{Knn, Pipelines, Relational, Retrieval}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audits — the "would this survive 100×" checks
@@ -673,5 +675,74 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin")
       || p.contains("ShuffledHashJoin"),
       s"the shingle intersection must plan as a hash/merge join:\n$p")
+  }
+
+  /** The physical plan as planned, before AQE runs any stage: every
+    * exchange is in place and none is reused yet, so a subtree planned
+    * twice shows twice. */
+  private def plannedTree(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  /** A small corpus stored as one parquet file per core, with queries
+    * and a canonical edge table over it, for the /search plan audits. */
+  private def searchInputs(): (DataFrame, DataFrame, DataFrame) = {
+    import spark.implicits._
+    val files = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("plansearch").toString
+    def vec(id: org.apache.spark.sql.Column, salt: Int) =
+      array((0 until 8).map(j =>
+        (pmod(xxhash64(id, lit(j + salt)), lit(1000)) / 1000d).cast("float")): _*)
+    spark.range(0, 400, 1, files).select(
+      concat(lit("d"), col("id")).as("id"),
+      when(col("id") % 3 === 0, "image").otherwise("text").as("mtype"),
+      concat(lit("payload "), col("id")).as("data"),
+      vec(col("id"), 0).as("embedding"))
+      .write.mode("overwrite").parquet(dir)
+    val queries = spark.range(0, 4, 1, 1).select(
+      concat(lit("q"), col("id")).as("qid"), lit("text").as("qtype"),
+      vec(col("id"), 100).as("qvec"))
+    val edges = (0 until 400).flatMap(i => Seq(1, 7).map(d =>
+      (s"d$i", s"d${(i + d) % 400}", ((i * 31 + d) % 100) / 100d)))
+      .toDF("src", "dst", "score")
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"), col("score"))
+    (spark.read.parquet(dir), queries, edges)
+  }
+
+  test("brute /search over a corpus stored as >= defaultParallelism files: one shuffle (on qid), the KNN planned once, no spread") {
+    val (docs, queries, edges) = searchInputs()
+    // a 1-byte spread floor: only the split estimate decides the spread
+    val conf = GraftConf(dim = 8, spreadScoringMinBytes = 1L)
+    val df = Pipelines.search(docs, queries, edges, conf, Retrieval.Brute)
+    val plan = plannedTree(df)
+    val shuffles = plan.collect {
+      case e: ShuffleExchangeLike => e
+      case r: ReusedExchangeExec => r
+    }
+    assert(shuffles.size == 1, s"one exchange expected:\n$plan")
+    val keys = shuffles.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map(_.sql)
+      case other => Seq(other.toString)
+    }
+    assert(keys == Seq("qid"), s"the exchange must hash-partition on qid:\n$plan")
+    assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.size == 1,
+      s"the KNN subtree must be planned once:\n$plan")
+    assert(!plan.toString.contains("RoundRobinPartitioning"),
+      s"a corpus already split over the cores must not be spread:\n$plan")
+    assert(df.count() > 0)
+  }
+
+  test("ANN /search: the ANN subtree is planned once") {
+    val (docs, queries, edges) = searchInputs()
+    val conf = GraftConf(dim = 8)
+    val ann = Retrieval.MultiTableLsh(dim = 8)
+    def embeddingScans(df: DataFrame) = plannedTree(df).collect {
+      case s: FileSourceScanExec if s.requiredSchema.fieldNames.contains("embedding") => s
+    }.size
+    val alone = embeddingScans(ann.topK(docs, queries, conf.searchK, conf))
+    assert(alone > 0)
+    assert(embeddingScans(Pipelines.search(docs, queries, edges, conf, ann)) == alone)
   }
 }
